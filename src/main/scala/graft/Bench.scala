@@ -422,7 +422,7 @@ object Bench {
     * external timeout.
     */
   private def forkPhase(cpus: Int, reps: Int, tag: String,
-      calibTries: Int, maxWaitS: Double = Double.MaxValue): PhaseResult = {
+      calibTries: Int, maxWaitS: Double): PhaseResult = {
     val javaBin = s"${sys.props("java.home")}/bin/java"
     val jvmArgs = java.lang.management.ManagementFactory
       .getRuntimeMXBean.getInputArguments

@@ -540,8 +540,10 @@ object SearchGate {
 
   /** RealTimeGet view HANDLE over the (static) two-snapshot fixture —
     * the per-query snapshot listing + schema inference repeated nothing
-    * but driver work; the rows still come off the snapshot parquets at
-    * every action. Keyed by (sfDir, ids) to stay general.
+    * but driver work. When every snapshot's docs fit the driver budget
+    * (the local branch of `realTimeGet`), the rows were collected once and
+    * the view is a driver-side frame; otherwise they come off the snapshot
+    * parquets at every action. Keyed by (sfDir, ids) to stay general.
     */
   private val rtgDfCache =
     scala.collection.concurrent.TrieMap.empty[(String, Seq[Long]), DataFrame]
@@ -916,12 +918,10 @@ object SearchGate {
     // that is NOT in the index); combinations re-join adjacent query
     // fragments (val+ue → value at 1 change, str+ea+m → stream at 2)
     "q_wordbreak1" -> ((spark, sfDir) => {
-      import spark.implicits._
       breaksDf(spark, searcher(spark, sfDir)
         .suggestWordBreaks("sortmerge", 5, maxChanges = 1))
     }),
     "q_wordbreak2" -> ((spark, sfDir) => {
-      import spark.implicits._
       breaksDf(spark, searcher(spark, sfDir)
         .suggestWordBreaks("sortmergekey", 5, maxChanges = 2))
     }),

@@ -195,7 +195,7 @@ object CompositeId {
     * separators are transcribed verbatim.
     */
   private final class KeyParser(key: String) {
-    private var partsList = List.newBuilder[String]
+    private val partsList = List.newBuilder[String]
     private val firstSep = key.indexOf('!')
     if (firstSep == -1) partsList += key
     else {

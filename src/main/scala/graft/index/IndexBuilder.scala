@@ -912,7 +912,7 @@ object IndexBuilder {
   /** Stream consecutive (term, salt) groups into encoded blobs. */
   private def encodePartition(it: Iterator[PRow],
       withPositions: Boolean, numBuckets: Int,
-      lineage: Option[LineageAcc] = None): Iterator[SegmentPosting] =
+      lineage: Option[LineageAcc]): Iterator[SegmentPosting] =
     new Iterator[SegmentPosting] {
       private val buf = it.buffered
       private val noPos = Array.empty[Byte]
@@ -1085,7 +1085,6 @@ object IndexBuilder {
       numGroups: Int = 4, failAfterGroup: Int = Int.MaxValue,
       verbose: Boolean = false): Manifest = {
     val spark = ix.docs.sparkSession
-    import spark.implicits._
     val cfg = ix.cfg
     val fs = new java.io.File(dir)
     fs.mkdirs()

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.search.{BM25, BoolQ, BoostQ, Query, Searcher, SegmentSearcher, TermQ}
+import graft.search.{BoolQ, BoostQ, Query, Searcher, SegmentSearcher, TermQ}
 
 /** Index-backed text classification — the reference's classification
   * module (`lucene/classification/src/java/org/apache/lucene/

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Large-scale training-data deduplication operators. All are
@@ -262,7 +262,6 @@ object Dedup {
     require(numHashes % bands == 0)
     val rows = numHashes / bands
     val params = hashParams(numHashes, seed)
-    val spark = df.sparkSession
     val sigUdf = udf { (s: String) =>
       val toks = graft.core.Analysis.simpleTokens(s)
       val shs = if (toks.length < n) Set.empty[Long]

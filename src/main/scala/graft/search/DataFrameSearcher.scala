@@ -2,7 +2,6 @@ package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.Norms
 import graft.index.IndexBuilder.LogicalIndex
 
 /** Declarative scoring path: every Boolean composition is expressed as

@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
 import graft.core.Hit
 import graft.index.PostingsCodec
 import graft.search.SegmentSearcher.SegRow
@@ -18,8 +18,9 @@ import graft.search.SegmentSearcher.SegRow
   *   - across terms: SHOULD with Solr mm
   *
   * Execution mirrors the single-field Searcher: driver-local scorer trees
-  * through the blob cache when the estimated posting bytes fit, a
-  * groupByKey shard path when they don't (hot lists never centralize);
+  * through the blob cache when the estimated posting bytes fit, one shard
+  * job over the fields' resident postings stores when they don't (hot
+  * lists never centralize);
   * salted terms shard by docId mod S exactly like single-field queries, so
   * per-shard streams from different fields stay docId-aligned.
   */
@@ -219,32 +220,23 @@ object MultiField {
 
   private def execDistributed(fields: Seq[FieldRef],
       stats: Seq[Map[String, (Long, Long)]], plan: MfPlan): Seq[Array[Hit]] = {
-    val spark = fields.head.searcher.spark
-    import spark.implicits._
-    val tagged: Seq[Dataset[(Int, SegRow)]] =
+    val tagged: Seq[RDD[(Int, SegRow)]] =
       fields.zipWithIndex.flatMap { case (fr, i) =>
         val present = plan.terms.filter(stats(i).contains).toSet
         if (present.isEmpty) None
-        else Some(fr.searcher.prunedRows(present).map(r => (i, r)))
+        else Some(fr.searcher.storeRows(present).map(r => (i, r)))
       }
     if (tagged.isEmpty) return Nil
-    val all = tagged.reduce(_ union _)
-    val S = plan.numShards
-    val sharded = plan.sharded
-    val bPlan = spark.sparkContext.broadcast(plan)
-    all.flatMap { case (f, r) =>
-        if (!sharded) Seq((0, (f, r)))
-        else if (r.salt >= 0) Seq((r.salt, (f, r)))
-        else (0 until S).map(s => (s, (f, r)))
-      }
-      .groupByKey(_._1)
-      .mapGroups { (shard, it) =>
-        val p = bPlan.value
-        val blobs = it.map(_._2).toSeq.groupBy(fr => (fr._1, fr._2.term))
-          .view.mapValues(_.map(_._2)).toMap
-        execShardMf(if (p.sharded) shard else -1, blobs, p)
-      }
-      .collect().toSeq
+    val sc = fields.head.searcher.spark.sparkContext
+    val bPlan = sc.broadcast(plan)
+    try SegmentSearcher.onShards(sc.union(tagged),
+        (fr: (Int, SegRow)) => fr._2.salt, plan.numShards, plan.sharded) {
+        (shard, it) =>
+          val blobs = it.toSeq.groupBy(fr => (fr._1, fr._2.term))
+            .view.mapValues(_.map(_._2)).toMap
+          Iterator.single(execShardMf(shard, blobs, bPlan.value))
+      }.collect().toSeq
+    finally bPlan.destroy()
   }
 
   /** One shard's scorer tree: per term a DisMax over qf-field TermScorers
@@ -477,31 +469,21 @@ object MultiField {
       byField: Map[String, Set[String]],
       stats: Map[String, Map[String, (Long, Long)]], primary: String,
       plan: MaskedPlan): Seq[Array[Hit]] = {
-    val spark = fields(primary).spark
-    import spark.implicits._
-    val tagged: Seq[Dataset[SegRow]] = byField.toSeq.flatMap { case (f, ts) =>
+    val tagged: Seq[RDD[SegRow]] = byField.toSeq.flatMap { case (f, ts) =>
       val present = ts.filter(stats(f).contains)
       if (present.isEmpty) None
-      else Some(fields(f).prunedRows(present)
+      else Some(fields(f).storeRows(present)
         .map(r => r.copy(term = nsKey(f, r.term, primary))))
     }
     if (tagged.isEmpty) return Nil
-    val all = tagged.reduce(_ union _)
-    val S = plan.numShards
-    val sharded = plan.sharded
-    val bPlan = spark.sparkContext.broadcast(plan)
-    all.flatMap { r =>
-        if (!sharded) Seq((0, r))
-        else if (r.salt >= 0) Seq((r.salt, r))
-        else (0 until S).map(s => (s, r))
-      }
-      .groupByKey(_._1)
-      .mapGroups { (shard, it) =>
-        val p = bPlan.value
-        execShardMasked(if (p.sharded) shard else -1,
-          it.map(x => x._2.term -> x._2).toMap, p)
-      }
-      .collect().toSeq
+    val sc = fields(primary).spark.sparkContext
+    val bPlan = sc.broadcast(plan)
+    try SegmentSearcher.onShards(sc.union(tagged), (r: SegRow) => r.salt,
+        plan.numShards, plan.sharded) { (shard, it) =>
+        Iterator.single(execShardMasked(shard, SegmentSearcher.blobMap(it),
+          bPlan.value))
+      }.collect().toSeq
+    finally bPlan.destroy()
   }
 
   private[search] def execShardMasked(shard: Int,

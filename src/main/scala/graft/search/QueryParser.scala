@@ -203,8 +203,6 @@ object QueryParser {
 
     /** A '+'-or-whitespace chain; '-' negates its operand. */
     private def parseAnd(): Query = {
-      val pos0 = Seq.newBuilder[Query]
-      val neg0 = Seq.newBuilder[Query]
       var more = true
       var explicitAnd = false
       var sawAny = false
@@ -623,7 +621,7 @@ object QueryParser {
       if (!eof && peek == ':' ) { pos += 1; w = wildcardWord() }
       val hasStar = w.contains('*')
       val hasQm = w.contains('?')
-      var q: Query =
+      val q: Query =
         if (hasStar && w.indexOf('*') == w.length - 1 && !hasQm &&
             w.count(_ == '*') == 1)
           PrefixQ(analyzeOne(w.dropRight(1)))    // trailing-only star

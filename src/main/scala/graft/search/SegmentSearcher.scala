@@ -1,5 +1,9 @@
 package graft.search
 
+import scala.reflect.ClassTag
+import org.apache.spark.HashPartitioner
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Hit
@@ -322,11 +326,32 @@ object SegmentSearcher {
 
   // ---------- per-shard execution ----------
 
-  /** Blob map of one shard group's rows (markers — salt == -2 — skipped).
-    * Lives on the OBJECT so executor closures stay Searcher-free.
+  /** Blob map of one shard's rows. Lives on the OBJECT so executor
+    * closures stay Searcher-free.
     */
-  private[search] def blobsOf(it: Iterator[(Int, SegRow)]): Map[String, SegRow] =
-    it.map(_._2).filter(_.salt != -2).map(r => r.term -> r).toMap
+  private[search] def blobMap(it: Iterator[SegRow]): Map[String, SegRow] =
+    it.map(r => r.term -> r).toMap
+
+  /** The shard stage of one distributed call, as one RDD job: rows move
+    * under the salt law — a salted row to its own shard, a cold row to
+    * every shard — and `body` runs once per shard partition (partition
+    * index = shard; -1 when the plan is unsharded). Every shard runs,
+    * including one that receives no rows, so a MatchAll-backed tree
+    * still reaches shards that hold none of the query's postings.
+    */
+  private[search] def onShards[T: ClassTag, R: ClassTag](rows: RDD[T],
+      saltOf: T => Int, numShards: Int, sharded: Boolean)(
+      body: (Int, Iterator[T]) => Iterator[R]): RDD[R] = {
+    val n = if (sharded) numShards else 1
+    rows.flatMap { r =>
+        val s = saltOf(r)
+        if (sharded && s >= 0) Iterator.single((s, r))
+        else Iterator.range(0, n).map(i => (i, r))
+      }
+      .partitionBy(new HashPartitioner(n))
+      .mapPartitionsWithIndex((i, it) =>
+        body(if (sharded) i else -1, it.map(_._2)))
+  }
 
   /** Exhaustively count a shard's matches (TotalHitCountCollector body). */
   private[search] def countShard(shard: Int, blobs: Map[String, SegRow],
@@ -1179,9 +1204,9 @@ object SegmentSearcher {
 
 }
 
-/** Reusable query handle over one index: caches the segments / termstats
-  * DataFrames (optionally pinned in memory), memoizes term stats, and
-  * picks the execution mode per query:
+/** Reusable query handle over one index: caches the termstats and the
+  * query tiers' postings (optionally pinned in memory), memoizes term
+  * stats, and picks the execution mode per query:
   *
   *  - DRIVER-LOCAL when the estimated posting bytes for the query terms
   *    fit `maxLocalBytes`: collect the pruned blobs once and run the
@@ -1190,9 +1215,12 @@ object SegmentSearcher {
   *    leaf-slice executor of `IndexSearcher.java:605-615`. This removes
   *    the per-query shuffle: sub-10ms queries instead of Spark-job
   *    latency.
-  *  - DISTRIBUTED (groupByKey over shards) when the blobs are large —
-  *    hot salted terms at 100 TB scale — so no single node ever holds a
-  *    full posting list.
+  *  - DISTRIBUTED when the blobs are large — hot salted terms at 100 TB
+  *    scale — so no single node ever holds a full posting list: one RDD
+  *    job per call does point lookups in a resident postings store
+  *    (term → rows, one map per partition of the segment read, built on
+  *    the first distributed call), moves the rows to their shards and
+  *    runs one shard task per shard.
   */
 final class Searcher(private[search] val spark: SparkSession,
     val index: SegmentSearcher.SegmentIndex,
@@ -1238,7 +1266,22 @@ final class Searcher(private[search] val spark: SparkSession,
       df.filter(live(col("docId")))
     }
 
-  lazy val segmentsDf: DataFrame = {
+  /** Release actions for what this handle has pinned so far; `close()`
+    * runs them, so it never builds a cache only to drop it.
+    */
+  private val pinnedReleases =
+    new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
+  private def pinned(df: DataFrame): DataFrame =
+    if (!cacheSegments) df
+    else {
+      val p = df.persist()
+      p.count()
+      pinnedReleases.add(() => p.unpersist())
+      p
+    }
+
+  /** The segment rows as stored: one parquet read, never cached here. */
+  private def segmentsRead: DataFrame = {
     val raw = spark.read
       .option("basePath", s"${index.dir}/segments")
       .parquet(index.segmentPaths: _*)
@@ -1251,15 +1294,83 @@ final class Searcher(private[search] val spark: SparkSession,
     val withPay =
       if (withPos.columns.contains("payBlocks")) withPos
       else withPos.withColumn("payBlocks", lit(Array.empty[Byte]))
-    val df = withPay
+    withPay
       .select("bucket", "term", "salt", "docBlocks", "skipData", "posBlocks",
         "payBlocks")
-    if (cacheSegments) { val p = df.persist(); p.count(); p } else df
   }
 
-  lazy val termStatsDf: DataFrame = {
-    val df = spark.read.parquet(s"${index.dir}/termstats")
-    if (cacheSegments) { val p = df.persist(); p.count(); p } else df
+  /** Columnar copy of the segment rows for the driver-local tier's
+    * pruned reads ([[fetchRows]], [[termTfDf]]).
+    */
+  lazy val segmentsDf: DataFrame = pinned(segmentsRead)
+
+  lazy val termStatsDf: DataFrame =
+    pinned(spark.read.parquet(s"${index.dir}/termstats"))
+
+  /** Resident postings store of the distributed tier, built on the first
+    * distributed call: each partition of the segment parquet read, mapped
+    * in place (no shuffle) to a term → rows map, and pinned when
+    * `cacheSegments`. The same job returns the driver's summary of which
+    * buckets each partition holds, so a call visits only the partitions
+    * that can hold its terms.
+    */
+  private lazy val store
+      : (RDD[(Set[Int], Map[String, Array[SegRow]])], Array[Set[Int]]) = {
+    val parts = segmentsRead.rdd.mapPartitions { rows =>
+      val buckets = scala.collection.mutable.Set.empty[Int]
+      val byTerm = scala.collection.mutable.HashMap
+        .empty[String, List[SegRow]]
+      rows.foreach { r =>
+        buckets += r.getInt(0)
+        val row = SegRow(r.getString(1), r.getInt(2), r.getAs[Array[Byte]](3),
+          r.getAs[Array[Byte]](4), r.getAs[Array[Byte]](5),
+          r.getAs[Array[Byte]](6))
+        byTerm(row.term) = row :: byTerm.getOrElse(row.term, Nil)
+      }
+      Iterator.single((buckets.toSet,
+        byTerm.iterator.map { case (t, rs) => t -> rs.toArray }.toMap))
+    }
+    if (cacheSegments) {
+      parts.persist()
+      pinnedReleases.add(() => parts.unpersist(blocking = false))
+    }
+    (parts, parts.map(_._1).collect())
+  }
+
+  /** Point lookups of `present` in the partitions of the store that hold
+    * their buckets.
+    */
+  private[search] def storeRows(present: Set[String]): RDD[SegRow] =
+    if (present.isEmpty) spark.sparkContext.emptyRDD[SegRow]
+    else {
+      val (parts, summary) = store
+      val want = present.map(t => IndexBuilder.bucketOf(t, m.numBuckets))
+      val terms = present.toArray
+      PartitionPruningRDD.create(parts, i => summary(i).exists(want))
+        .flatMap { case (_, byTerm) =>
+          terms.iterator.flatMap(t => byTerm.getOrElse(t, Array.empty[SegRow]).iterator)
+        }
+    }
+
+  /** The shard tasks of one distributed call over this handle's store:
+    * `body` gets each shard's blob map and the broadcast plan.
+    */
+  private def shardRdd[R: ClassTag](present: Set[String],
+      bPlan: Broadcast[Plan])(
+      body: (Int, Map[String, SegRow], Plan) => Iterator[R]): RDD[R] = {
+    val p = bPlan.value
+    onShards(storeRows(present), (r: SegRow) => r.salt, p.numShards,
+      p.sharded)((shard, rows) => body(shard, blobMap(rows), bPlan.value))
+  }
+
+  /** [[shardRdd]] collected; the plan's broadcast (it carries every
+    * tombstone) is destroyed once the answer is on the driver.
+    */
+  private def collectShards[R: ClassTag](present: Set[String], plan: Plan)(
+      body: (Int, Map[String, SegRow], Plan) => Iterator[R]): Array[R] = {
+    val bPlan = spark.sparkContext.broadcast(plan)
+    try shardRdd(present, bPlan)(body).collect()
+    finally bPlan.destroy()
   }
 
   /** term → (df, ttf); None memoized for absent terms. */
@@ -1664,7 +1775,7 @@ final class Searcher(private[search] val spark: SparkSession,
       }
     def scan(pred: String => Boolean,
         dfPred: => org.apache.spark.sql.Column,
-        pfxHint: => Option[org.apache.spark.sql.Column] = None): Seq[String] =
+        pfxHint: => Option[org.apache.spark.sql.Column]): Seq[String] =
       termDict match {
         case Some(d) => d.iterator.filter(pred).take(maxExpansions).toSeq
         case None => viaDf(dfPred, pfxHint)
@@ -1825,7 +1936,7 @@ final class Searcher(private[search] val spark: SparkSession,
     * expansion prunes the subtree via Span.simplify.
     */
   private def goSpanMulti(root: Span, go: Query => Query,
-      maxExpansions: Int = 1024): Span = {
+      maxExpansions: Int): Span = {
     def goSpan(s: Span): Span = s match {
       case Span.Multi(inner) =>
         val ts = Query.literalTerms(go(inner)).toSeq.sorted
@@ -1994,72 +2105,47 @@ final class Searcher(private[search] val spark: SparkSession,
       Array.empty[SegRow])).toArray
   }
 
+  /** The driver-local tier's shards for `present`, read through the blob
+    * cache: each shard's blob map under the salt law (-1 = the one shard
+    * of an unsharded plan). A shard without rows still runs when a
+    * MatchAll backs the tree — its matches need no postings — as every
+    * shard does on the distributed tier.
+    */
+  private def localShards(present: Set[String], plan: Plan)
+      : Seq[(Int, Map[String, SegRow])] = {
+    val rows = if (present.isEmpty) Array.empty[SegRow] else fetchRows(present)
+    val keepEmpty = Query.containsMatchAll(plan.query)
+    if (!plan.sharded)
+      if (rows.isEmpty && !keepEmpty) Nil else Seq(-1 -> blobMap(rows.iterator))
+    else (0 until plan.numShards).map { s =>
+      s -> blobMap(rows.iterator.filter(r => r.salt == s || r.salt < 0))
+    }.filter(sb => sb._2.nonEmpty || keepEmpty)
+  }
+
+  /** `f` over the shards, on the shared driver pool when there are
+    * several.
+    */
+  private def onPool[R](shards: Seq[(Int, Map[String, SegRow])])(
+      f: (Int, Map[String, SegRow]) => R): Seq[R] =
+    if (shards.size <= 1) shards.map(f.tupled)
+    else shards.map { case (s, blobs) =>
+      SegmentSearcher.localPool.submit(new java.util.concurrent.Callable[R] {
+        def call(): R = f(s, blobs)
+      })
+    }.map(_.get())
+
   /** Pruned read (through the blob cache) → thread-pool over shards on
     * the driver.
     */
-  private def execLocal(present: Set[String], plan: Plan): Seq[Array[Hit]] = {
-    val rows = fetchRows(present)
-    if (rows.isEmpty) return Nil
-    if (!plan.sharded) Seq(execShard(-1, rows.map(r => r.term -> r).toMap, plan))
-    else {
-      val byShard = (0 until plan.numShards).map { s =>
-        s -> rows.filter(r => r.salt == s || r.salt < 0)
-          .map(r => r.term -> r).toMap
-      }.filter(_._2.nonEmpty)
-      val futs = byShard.map { case (s, blobs) =>
-        SegmentSearcher.localPool.submit(
-          new java.util.concurrent.Callable[Array[Hit]] {
-            def call(): Array[Hit] = execShard(s, blobs, plan)
-          })
-      }
-      futs.map(_.get())
-    }
-  }
+  private def execLocal(present: Set[String], plan: Plan): Seq[Array[Hit]] =
+    onPool(localShards(present, plan))(execShard(_, _, plan))
 
-  /** (shard, SegRow) pairs for the distributed shard tasks: salted rows go
-    * to their shard, cold rows replicate to every shard. When the query
-    * tree is backed by a MatchAllQ (or `forceAllShards`), zero-byte MARKER
-    * rows (salt == -2, skipped when building the blob map) seed every
-    * shard key — otherwise a shard with no segment rows would produce no
-    * groupByKey group and its MatchAll-derived matches would be silently
-    * lost.
+  /** Shard tasks over the resident store (the 100 TB path: hot posting
+    * lists never centralize).
     */
-  private def shardRows(present: Set[String], plan: Plan,
-      forceAllShards: Boolean): Dataset[(Int, SegRow)] = {
-    import spark.implicits._
-    val rows: Dataset[SegRow] =
-      if (present.isEmpty) spark.emptyDataset[SegRow] else prunedRows(present)
-    val S = plan.numShards
-    val sharded = plan.sharded
-    val shardOf: SegRow => Seq[(Int, SegRow)] =
-      if (!sharded) r => Seq((0, r))
-      else r =>
-        if (r.salt >= 0) Seq((r.salt, r))
-        else (0 until S).map(s => (s, r))
-    val base = rows.flatMap(shardOf)
-    if (!forceAllShards && !Query.containsMatchAll(plan.query)) base
-    else {
-      val empty = Array.empty[Byte]
-      val markers = (0 until (if (sharded) S else 1))
-        .map(s => (s, SegRow("", -2, empty, empty, empty, empty)))
-      base.union(markers.toDS())
-    }
-  }
-
-  /** Shuffle blobs to shard tasks (the 100 TB path: hot posting lists
-    * never centralize).
-    */
-  private def execDistributed(present: Set[String], plan: Plan): Seq[Array[Hit]] = {
-    import spark.implicits._
-    val bPlan = spark.sparkContext.broadcast(plan)
-    shardRows(present, plan, forceAllShards = false)
-      .groupByKey(_._1)
-      .mapGroups { (shard, it) =>
-        val p = bPlan.value
-        execShard(if (p.sharded) shard else -1, blobsOf(it), p)
-      }
-      .collect().toSeq
-  }
+  private def execDistributed(present: Set[String], plan: Plan): Seq[Array[Hit]] =
+    collectShards(present, plan)((shard, blobs, p) =>
+      Iterator.single(execShard(shard, blobs, p))).toSeq
 
   private[search] def prunedRows(present: Set[String]): Dataset[SegRow] = {
     import spark.implicits._
@@ -2079,8 +2165,8 @@ final class Searcher(private[search] val spark: SparkSession,
     * per-shard exhaustive scorer iteration, counts summed across shards.
     * Routed through the same `estBytes <= maxLocalBytes` gate as search():
     * a hot term's posting bytes never centralize on the driver — the
-    * distributed path counts inside the groupByKey shard tasks and ships
-    * back ONE long per shard.
+    * distributed path counts inside the shard tasks and ships back ONE
+    * long per shard.
     */
   def count(q0: Query): Long = {
     q0 match {
@@ -2107,29 +2193,12 @@ final class Searcher(private[search] val spark: SparkSession,
     val sharded = weights.values.exists(_.salted)
     val plan = withDeletes(Plan(q, 1, None, weights, cache, m.numDocShards, sharded,
       m.docCount, params, useWand = false))
-    if (present.isEmpty) SegmentSearcher.countShard(-1, Map.empty, plan)
-    else if (estPostingBytes(st, present) <= maxLocalBytes) {
-      val rows = fetchRows(present)
-      if (rows.isEmpty) 0L
-      else if (!sharded)
-        SegmentSearcher.countShard(-1, rows.map(r => r.term -> r).toMap, plan)
-      else (0 until plan.numShards).map { s =>
-        val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-          .map(r => r.term -> r).toMap
-        if (blobs.isEmpty) 0L else SegmentSearcher.countShard(s, blobs, plan)
+    if (present.isEmpty || estPostingBytes(st, present) <= maxLocalBytes)
+      localShards(present, plan).map { case (s, blobs) =>
+        SegmentSearcher.countShard(s, blobs, plan)
       }.sum
-    } else {
-      import spark.implicits._
-      val bPlan = spark.sparkContext.broadcast(plan)
-      shardRows(present, plan, forceAllShards = false)
-        .groupByKey(_._1)
-        .mapGroups { (shard, it) =>
-          val p = bPlan.value
-          SegmentSearcher.countShard(if (p.sharded) shard else -1,
-            SegmentSearcher.blobsOf(it), p)
-        }
-        .collect().sum
-    }
+    else collectShards(present, plan)((shard, blobs, p) =>
+      Iterator.single(SegmentSearcher.countShard(shard, blobs, p))).sum
   }
 
   // ---------- collector protocol ----------
@@ -2166,21 +2235,11 @@ final class Searcher(private[search] val spark: SparkSession,
       case Some((plan, present, st)) =>
         val hasAll = Query.containsMatchAll(plan.query)
         if (present.isEmpty && !hasAll) return
-        val shards: Seq[(Int, Map[String, SegRow])] =
-          if (present.isEmpty) Seq((-1, Map.empty))
-          else {
-            require(estPostingBytes(st, present) <= maxLocalBytes,
-              "collector protocol is driver-local: postings exceed " +
-                "maxLocalBytes — use searchWithCount (fused shard " +
-                "partials) or raise maxLocalBytes")
-            val rows = fetchRows(present)
-            if (rows.isEmpty) Nil
-            else if (!plan.sharded) Seq((-1, rows.map(r => r.term -> r).toMap))
-            else (0 until plan.numShards).map { s =>
-              s -> rows.filter(r => r.salt == s || r.salt < 0)
-                .map(r => r.term -> r).toMap
-            }.filter(_._2.nonEmpty)
-          }
+        require(present.isEmpty || estPostingBytes(st, present) <= maxLocalBytes,
+          "collector protocol is driver-local: postings exceed " +
+            "maxLocalBytes — use searchWithCount (fused shard " +
+            "partials) or raise maxLocalBytes")
+        val shards = localShards(present, plan)
         // sequential, shard-ascending: collectors are stateful and the
         // reference's leaf order is likewise deterministic
         shards.foreach { case (s, blobs) =>
@@ -2205,40 +2264,12 @@ final class Searcher(private[search] val spark: SparkSession,
         val hasAll = Query.containsMatchAll(plan.query)
         if (present.isEmpty && !hasAll) return (Array.empty, 0L)
         val partials: Seq[(Array[Hit], Long)] =
-          if (present.isEmpty)
-            Seq(SegmentSearcher.topkCountShard(-1, Map.empty, plan))
-          else if (estPostingBytes(st, present) <= maxLocalBytes) {
-            val rows = fetchRows(present)
-            if (rows.isEmpty) Nil
-            else if (!plan.sharded)
-              Seq(SegmentSearcher.topkCountShard(-1,
-                rows.map(r => r.term -> r).toMap, plan))
-            else {
-              val byShard = (0 until plan.numShards).map { s =>
-                s -> rows.filter(r => r.salt == s || r.salt < 0)
-                  .map(r => r.term -> r).toMap
-              }.filter(_._2.nonEmpty)
-              val futs = byShard.map { case (s, blobs) =>
-                SegmentSearcher.localPool.submit(
-                  new java.util.concurrent.Callable[(Array[Hit], Long)] {
-                    def call(): (Array[Hit], Long) =
-                      SegmentSearcher.topkCountShard(s, blobs, plan)
-                  })
-              }
-              futs.map(_.get())
-            }
-          } else {
-            import spark.implicits._
-            val bPlan = spark.sparkContext.broadcast(plan)
-            shardRows(present, plan, forceAllShards = false)
-              .groupByKey(_._1)
-              .mapGroups { (shard, it) =>
-                val p = bPlan.value
-                SegmentSearcher.topkCountShard(if (p.sharded) shard else -1,
-                  SegmentSearcher.blobsOf(it), p)
-              }
-              .collect().toSeq
-          }
+          if (present.isEmpty || estPostingBytes(st, present) <= maxLocalBytes)
+            onPool(localShards(present, plan))(
+              SegmentSearcher.topkCountShard(_, _, plan))
+          else collectShards(present, plan)((shard, blobs, p) =>
+            Iterator.single(SegmentSearcher.topkCountShard(shard, blobs, p)))
+            .toSeq
         (TopK.merge(partials.map(_._1), k), partials.map(_._2).sum)
     }
   }
@@ -2755,26 +2786,19 @@ final class Searcher(private[search] val spark: SparkSession,
       }
     } else {
       // distributed: first-pass hits broadcast to the shard tasks, blobs
-      // stay executor-side; forceAllShards seeds a group even for shards
-      // whose rescore-query blobs are empty (their hits keep firstScore)
-      import spark.implicits._
-      val bPlan = spark.sparkContext.broadcast(plan)
+      // stay executor-side; every shard runs, so hits on a shard whose
+      // rescore-query blobs are empty keep firstScore
       val byShard: Map[Int, Array[Hit]] =
-        if (!sharded) Map(0 -> first)
+        if (!sharded) Map(-1 -> first)
         else first.groupBy(h => (h.docId % plan.numShards).toInt)
       val bHits = spark.sparkContext.broadcast(byShard)
       val w = weight
-      shardRows(present, plan, forceAllShards = true)
-        .groupByKey(_._1)
-        .flatMapGroups { (shard, it) =>
-          val p = bPlan.value
+      try collectShards(present, plan) { (shard, blobs, p) =>
           val hits = bHits.value.getOrElse(shard, Array.empty[Hit])
           if (hits.isEmpty) Iterator.empty
-          else SegmentSearcher.rescoreShard(if (p.sharded) shard else -1,
-            SegmentSearcher.blobsOf(it), p, hits, w)
-        }
-        .collect()
-        .foreach(h => queue.insert(h.docId, h.score))
+          else SegmentSearcher.rescoreShard(shard, blobs, p, hits, w)
+        }.foreach(h => queue.insert(h.docId, h.score))
+      finally bHits.destroy()
     }
     queue.sortedHits
   }
@@ -2840,8 +2864,8 @@ final class Searcher(private[search] val spark: SparkSession,
     * order.
     *
     * Scale shape: when either the query blobs or the docvalues column
-    * exceed `maxLocalBytes`, matching docIds stream out of the groupByKey
-    * shard tasks, sort keys are joined executor-side from the docs table
+    * exceed `maxLocalBytes`, matching docIds stream out of the shard
+    * tasks, sort keys are joined executor-side from the docs table
     * (the column store), and the top-k comes from Spark's
     * TakeOrderedAndProject (bounded per-partition heap + driver merge of
     * k) — nothing doc-count-sized ever reaches the driver.
@@ -3553,18 +3577,7 @@ final class Searcher(private[search] val spark: SparkSession,
         pq.dequeueAll.toSeq
       }
       val partials: Seq[(Long, Array[Long])] =
-        if (present.isEmpty) collectShard(-1, Map.empty)
-        else {
-          val rows = fetchRows(present)
-          if (rows.isEmpty) Nil
-          else if (!plan.sharded)
-            collectShard(-1, rows.map(r => r.term -> r).toMap)
-          else (0 until plan.numShards).flatMap { s =>
-            val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-              .map(r => r.term -> r).toMap
-            if (blobs.isEmpty) Nil else collectShard(s, blobs)
-          }
-        }
+        localShards(present, plan).flatMap((collectShard _).tupled)
       partials.sorted(ord).take(k).toArray
     } else {
       import org.apache.spark.sql.functions.col
@@ -3640,17 +3653,7 @@ final class Searcher(private[search] val spark: SparkSession,
       queue.sortedHits
     }
     val partials: Seq[Array[Hit]] =
-      if (present.isEmpty) Seq(collectShard(-1, Map.empty))
-      else {
-        val rows = fetchRows(present)
-        if (rows.isEmpty) Nil
-        else if (!plan.sharded) Seq(collectShard(-1, rows.map(r => r.term -> r).toMap))
-        else (0 until plan.numShards).flatMap { s =>
-          val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-            .map(r => r.term -> r).toMap
-          if (blobs.isEmpty) None else Some(collectShard(s, blobs))
-        }
-      }
+      localShards(present, plan).map((collectShard _).tupled)
     lastFieldScanDocs = visited
     TopK.merge(partials, k).map(h => (h.docId, (sign * h.score).toLong))
   }
@@ -3659,33 +3662,29 @@ final class Searcher(private[search] val spark: SparkSession,
       field: String, asc: Boolean, k: Int): Array[(Long, Long)] = {
     import spark.implicits._
     val dv = dvDocsDf.select(col("docId"), col(field).cast("long").as("sortv"))
+    val bPlan = spark.sparkContext.broadcast(plan)
     val matches: DataFrame = liveDf(
       if (present.isEmpty) dv.select("docId")
       else {
-        val bPlan = spark.sparkContext.broadcast(plan)
         // index-sorted + asc: per-shard docId order IS field order, so
         // each shard task emits only its first k matches — the join +
         // global top-k below sees numShards·k rows instead of every match
         val earlyK = if (asc && m.indexSort.contains(field)) k else Int.MaxValue
-        shardRows(present, plan, forceAllShards = false)
-          .groupByKey(_._1)
-          .flatMapGroups { (shard, it) =>
-            val p = bPlan.value
-            val scorer = SegmentSearcher.buildScorer(p.query,
-              if (p.sharded) shard else -1, SegmentSearcher.blobsOf(it), p, 1f)
-            Iterator.continually(scorer.nextDoc())
-              .takeWhile(_ != DocScorer.NO_MORE)
-              .filterNot(graft.index.Deletes.contains(p.deletes, _))
-              .take(earlyK)
-          }
-          .toDF("docId")
+        shardRdd(present, bPlan) { (shard, blobs, p) =>
+          val scorer = SegmentSearcher.buildScorer(p.query, shard, blobs, p, 1f)
+          Iterator.continually(scorer.nextDoc())
+            .takeWhile(_ != DocScorer.NO_MORE)
+            .filterNot(graft.index.Deletes.contains(p.deletes, _))
+            .take(earlyK)
+        }.toDF("docId")
       })
-    matches.join(dv, "docId")
+    try matches.join(dv, "docId")
       .orderBy(if (asc) col("sortv").asc else col("sortv").desc,
         col("docId").asc)
       .limit(k)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)))
+    finally bPlan.destroy()
   }
 
   // ---------- expression sort + rescore (lucene/expressions) ----------
@@ -3768,18 +3767,7 @@ final class Searcher(private[search] val spark: SparkSession,
         queue.sortedHits
       }
       val partials: Seq[Array[Hit]] =
-        if (present.isEmpty) Seq(collectShard(-1, Map.empty))
-        else {
-          val rows = fetchRows(present)
-          if (rows.isEmpty) Nil
-          else if (!plan.sharded)
-            Seq(collectShard(-1, rows.map(r => r.term -> r).toMap))
-          else (0 until plan.numShards).flatMap { s =>
-            val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-              .map(r => r.term -> r).toMap
-            if (blobs.isEmpty) None else Some(collectShard(s, blobs))
-          }
-        }
+        localShards(present, plan).map((collectShard _).tupled)
       TopK.merge(partials, k).map(h => (h.docId, sign * h.score))
     } else {
       val dv = dvDocsDf.select(
@@ -3869,7 +3857,7 @@ final class Searcher(private[search] val spark: SparkSession,
     *
     * Scale shape: the local path keeps one bounded heap per key per
     * shard (the reference's perKeyQueues); the distributed path streams
-    * matches out of the groupByKey shard tasks, joins keys executor-side
+    * matches out of the shard tasks, joins keys executor-side
     * from the docs column store, and applies a per-key row_number window
     * + TakeOrderedAndProject — nothing match-count-sized reaches the
     * driver.
@@ -3937,18 +3925,7 @@ final class Searcher(private[search] val spark: SparkSession,
       out.toArray
     }
     val partials: Seq[Array[Hit]] =
-      if (present.isEmpty) Seq(collectShard(-1, Map.empty))
-      else {
-        val rows = fetchRows(present)
-        if (rows.isEmpty) Nil
-        else if (!plan.sharded)
-          Seq(collectShard(-1, rows.map(r => r.term -> r).toMap))
-        else (0 until plan.numShards).flatMap { s =>
-          val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-            .map(r => r.term -> r).toMap
-          if (blobs.isEmpty) None else Some(collectShard(s, blobs))
-        }
-      }
+      localShards(present, plan).map((collectShard _).tupled)
     // shards keep maxPerKey per key EACH — re-apply the within-key rank
     // filter globally, then the plain top-k
     val queue = new BoundedHitQueue(k)
@@ -3964,12 +3941,8 @@ final class Searcher(private[search] val spark: SparkSession,
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val bPlan = spark.sparkContext.broadcast(plan)
-    val matches = shardRows(present, plan, forceAllShards = false)
-      .groupByKey(_._1)
-      .flatMapGroups { (shard, it) =>
-        val p = bPlan.value
-        val scorer = SegmentSearcher.buildScorer(p.query,
-          if (p.sharded) shard else -1, SegmentSearcher.blobsOf(it), p, 1f)
+    val matches = shardRdd(present, bPlan) { (shard, blobs, p) =>
+        val scorer = SegmentSearcher.buildScorer(p.query, shard, blobs, p, 1f)
         Iterator.continually(scorer.nextDoc())
           .takeWhile(_ != DocScorer.NO_MORE)
           .map(d => (d, scorer.score.toDouble))
@@ -3978,7 +3951,7 @@ final class Searcher(private[search] val spark: SparkSession,
     val dv = docsDf.select(col("docId"), col(keyField).cast("string").as("dkey"))
     val w = Window.partitionBy("dkey")
       .orderBy(col("score").desc, col("docId").asc)
-    matches.join(dv, "docId")
+    try matches.join(dv, "docId")
       .withColumn("krnk", org.apache.spark.sql.functions.row_number().over(w))
       .filter(col("krnk") <= maxPerKey)
       .orderBy(col("score").desc, col("docId").asc)
@@ -3986,6 +3959,7 @@ final class Searcher(private[search] val spark: SparkSession,
       .select("docId", "score")
       .collect()
       .map(r => Hit(r.getLong(0), r.getDouble(1)))
+    finally bPlan.destroy()
   }
 
   // ---------- sandbox docvalues queries ----------
@@ -4170,18 +4144,7 @@ final class Searcher(private[search] val spark: SparkSession,
       queue.sortedHits
     }
     val partials: Seq[Array[Hit]] =
-      if (present.isEmpty) Seq(collectShard(-1, Map.empty))
-      else {
-        val rows = fetchRows(present)
-        if (rows.isEmpty) Nil
-        else if (!plan.sharded)
-          Seq(collectShard(-1, rows.map(r => r.term -> r).toMap))
-        else (0 until plan.numShards).flatMap { s =>
-          val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-            .map(r => r.term -> r).toMap
-          if (blobs.isEmpty) None else Some(collectShard(s, blobs))
-        }
-      }
+      localShards(present, plan).map((collectShard _).tupled)
     TopK.merge(partials, k)
   }
 
@@ -4189,12 +4152,8 @@ final class Searcher(private[search] val spark: SparkSession,
       field: String, pred: DvPred, k: Int): Array[Hit] = {
     import spark.implicits._
     val bPlan = spark.sparkContext.broadcast(plan)
-    val matches = shardRows(present, plan, forceAllShards = false)
-      .groupByKey(_._1)
-      .flatMapGroups { (shard, it) =>
-        val p = bPlan.value
-        val scorer = SegmentSearcher.buildScorer(p.query,
-          if (p.sharded) shard else -1, SegmentSearcher.blobsOf(it), p, 1f)
+    val matches = shardRdd(present, bPlan) { (shard, blobs, p) =>
+        val scorer = SegmentSearcher.buildScorer(p.query, shard, blobs, p, 1f)
         Iterator.continually(scorer.nextDoc())
           .takeWhile(_ != DocScorer.NO_MORE)
           .filterNot(graft.index.Deletes.contains(p.deletes, _))
@@ -4202,11 +4161,12 @@ final class Searcher(private[search] val spark: SparkSession,
       }
       .toDF("docId", "score")
     val dv = dvDocsDf.filter(dvPredCol(field, pred)).select(col("docId"))
-    matches.join(dv, "docId")
+    try matches.join(dv, "docId")
       .orderBy(col("score").desc, col("docId").asc)
       .limit(k)
       .collect()
       .map(r => Hit(r.getLong(0), r.getDouble(1)))
+    finally bPlan.destroy()
   }
 
   // ---------- query-time join (JoinUtil), driver-local tier ----------
@@ -4467,13 +4427,8 @@ final class Searcher(private[search] val spark: SparkSession,
       m.docCount, params, useWand = false))
     val present = terms.filter(st.contains)
     if (present.isEmpty && !hasAll) return emptyDf
-    val bPlan = spark.sparkContext.broadcast(plan)
-    shardRows(present, plan, forceAllShards = false)
-      .groupByKey(_._1)
-      .flatMapGroups { (shard, it) =>
-        val p = bPlan.value
-        val scorer = SegmentSearcher.buildScorer(p.query,
-          if (p.sharded) shard else -1, SegmentSearcher.blobsOf(it), p, 1f)
+    shardRdd(present, spark.sparkContext.broadcast(plan)) { (shard, blobs, p) =>
+        val scorer = SegmentSearcher.buildScorer(p.query, shard, blobs, p, 1f)
         Iterator.continually(scorer.nextDoc())
           .takeWhile(_ != DocScorer.NO_MORE)
           .map(d => (d, scorer.score))
@@ -4717,18 +4672,7 @@ final class Searcher(private[search] val spark: SparkSession,
         queue.sortedHits
       }
       val partials: Seq[Array[Hit]] =
-        if (present.isEmpty) Seq(collectShard(-1, Map.empty))
-        else {
-          val rows = fetchRows(present)
-          if (rows.isEmpty) Nil
-          else if (!plan.sharded)
-            Seq(collectShard(-1, rows.map(r => r.term -> r).toMap))
-          else (0 until plan.numShards).flatMap { s =>
-            val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-              .map(r => r.term -> r).toMap
-            if (blobs.isEmpty) None else Some(collectShard(s, blobs))
-          }
-        }
+        localShards(present, plan).map((collectShard _).tupled)
       TopK.merge(partials, k)
     } else {
       import org.apache.spark.sql.functions.col
@@ -4801,18 +4745,7 @@ final class Searcher(private[search] val spark: SparkSession,
         queue.sortedHits
       }
       val partials: Seq[Array[Hit]] =
-        if (present.isEmpty) Seq(collectShard(-1, Map.empty))
-        else {
-          val rows = fetchRows(present)
-          if (rows.isEmpty) Nil
-          else if (!plan.sharded)
-            Seq(collectShard(-1, rows.map(r => r.term -> r).toMap))
-          else (0 until plan.numShards).flatMap { s =>
-            val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-              .map(r => r.term -> r).toMap
-            if (blobs.isEmpty) None else Some(collectShard(s, blobs))
-          }
-        }
+        localShards(present, plan).map((collectShard _).tupled)
       TopK.merge(partials, k)
     } else {
       import org.apache.spark.sql.functions.{col, lit}
@@ -4867,17 +4800,7 @@ final class Searcher(private[search] val spark: SparkSession,
               out(d) = scorer.score; d = scorer.nextDoc()
             }
           }
-          val rows =
-            if (present.isEmpty) Array.empty[SegRow] else fetchRows(present)
-          if (!plan.sharded) {
-            if (rows.nonEmpty || hasAll)
-              walk(-1, rows.map(r => r.term -> r).toMap)
-          } else (0 until plan.numShards).foreach { s =>
-            val blobs = rows.filter(r => r.salt == s || r.salt < 0)
-              .map(r => r.term -> r).toMap
-            // hasAll mirrors matchScoresDf's marker rows on every shard
-            if (blobs.nonEmpty || hasAll) walk(s, blobs)
-          }
+          localShards(present, plan).foreach((walk _).tupled)
         }
       }
       out
@@ -4974,10 +4897,9 @@ final class Searcher(private[search] val spark: SparkSession,
       .toDF("docId", "tfv")
   }
 
+  /** Unpersist every cache this handle pinned. */
   def close(): Unit = {
-    if (cacheSegments) {
-      segmentsDf.unpersist()
-      termStatsDf.unpersist()
-    }
+    var release = pinnedReleases.poll()
+    while (release != null) { release(); release = pinnedReleases.poll() }
   }
 }

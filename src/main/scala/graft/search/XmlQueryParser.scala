@@ -1,6 +1,6 @@
 package graft.search
 
-import org.w3c.dom.{Element, Node}
+import org.w3c.dom.Element
 
 /** The reference's XML query parser surface (`lucene/queryparser/src/
   * java/org/apache/lucene/queryparser/xml/CoreParser.java:60-110` and

@@ -285,7 +285,6 @@ class ClassicSimSpec extends AnyFunSuite {
   }
 
   test("lmdirichlet term scores match an independent pipeline exactly") {
-    val n = docsToks.size.toLong
     val sumTtf = docsToks.values.map(_.length.toLong).sum
     def exp(t: String): Seq[(Long, Float)] = {
       val ttf = docsToks.values.map(_.count(_ == t).toLong).sum

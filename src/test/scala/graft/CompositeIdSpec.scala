@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.index.CompositeId
-import graft.index.CompositeId.{HashRange, FullRange}
+import graft.index.CompositeId.FullRange
 
 /** CompositeIdRouter bit-exactness (`solr/solrj/.../common/cloud/
   * CompositeIdRouter.java:35-330`, `common/util/Hash.java:242-420`):

@@ -319,7 +319,6 @@ class FunctionQuerySpec extends AnyFunSuite {
 
   test("realTimeGet: last-write-wins across batches; tier merges oldest") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val base = java.nio.file.Files.createTempDirectory("graft-rtg").toString
     def snap(id: String, rows: Seq[(Long, String)]): Unit = {
       val ix = IndexBuilder.buildLogical(

@@ -57,7 +57,6 @@ class JoinSweetSpec extends AnyFunSuite {
   }
 
   test("joinScoredLocal ≡ the distributed fold+broadcast path (all modes)") {
-    import spark.implicits._
     val ix = IndexBuilder.buildLogical(
       Corpus.dataset(spark, 300, seed = 77L).repartition(4).toDF(),
       "content", None, Seq("repo", "path", "commit", "lang"),

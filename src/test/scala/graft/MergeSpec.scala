@@ -142,7 +142,6 @@ class MergeSpec extends AnyFunSuite {
     // loader pass-throughs (spark.read.json/csv → buildLogical): the
     // engine is source-format-agnostic as long as the input_hint columns
     // arrive; both formats must produce the parquet-built ranking
-    import spark.implicits._
     val rows = numbered.take(120)
     val jsonDir = s"$tmp/loaders-json"
     val csvDir = s"$tmp/loaders-csv"

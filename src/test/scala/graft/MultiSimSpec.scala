@@ -76,7 +76,6 @@ class MultiSimSpec extends AnyFunSuite {
     * fieldNorm, over raw tokens + the stored norm byte law.
     */
   private def scoresClassicComponent(t: String, v: Float): Map[Long, Double] = {
-    import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"$ixDir/docs")
       .select("docId", "length", "content").collect()
     docs.flatMap { r =>

@@ -40,8 +40,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("exact duplicates found by hash dedup") {
-    val withExact = docs.union(Seq((2000L, null: String)).toDF("id", "text")
-      .filter(col("text").isNotNull)) // no-op, keep schema
     val copy = docs.filter(col("id") === 5).select(lit(2001L).as("id"), col("text"))
     val d2 = docs.unionByName(copy)
     val dups = Dedup.exactDuplicates(d2, "text", "id").collect()

@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions.col
 import graft.ops.Pipeline
 
 /** Corpus-preparation pipeline ops — hand-checked laws on crafted docs
